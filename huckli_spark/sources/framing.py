@@ -22,10 +22,13 @@ import gzip
 import io
 import os
 import struct
-from typing import BinaryIO, Iterable, Iterator
+from typing import TYPE_CHECKING, BinaryIO, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 FRAME_HEADER = struct.Struct(">I")
 
@@ -80,12 +83,29 @@ def open_maybe_gzip(path: str) -> BinaryIO:
     return open(path, "rb")
 
 
-def frames_df(
-    spark: SparkSession,
-    paths: list[str],
-    batch_rows: int = 2048,
-    tasks: int | None = None,
-) -> DataFrame:
+# frames per pandas batch a framing task yields: bounds task memory
+FRAME_BATCH_ROWS = 2048
+
+
+def frame_batches(name: str, stream: BinaryIO) -> Iterator["pd.DataFrame"]:
+    """Split one decompressed file stream into pandas batches of
+    (file_source, frame_index, payload), ``FRAME_BATCH_ROWS`` frames
+    at most each — the per-file loop shared by the batch reader
+    (``frames_df``) and the streaming reader (``stream_frames``)."""
+    import pandas as pd
+
+    columns = FRAMES_SCHEMA.fieldNames()
+    rows: list[tuple[str, int, bytes]] = []
+    for i, payload in enumerate(iter_frames(io.BufferedReader(stream, 1 << 20))):
+        rows.append((name, i, payload))
+        if len(rows) >= FRAME_BATCH_ROWS:
+            yield pd.DataFrame(rows, columns=columns)
+            rows = []
+    if rows:
+        yield pd.DataFrame(rows, columns=columns)
+
+
+def frames_df(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Distributed framed read: DataFrame of
     (file_source, frame_index, payload).
 
@@ -95,37 +115,22 @@ def frames_df(
 
     Scale: one input row per file fans out to one task per file slice
     (``repartition``), each task streaming-decodes its files; Arrow
-    batches bound memory to ``batch_rows`` frames.
+    batches bound memory to ``FRAME_BATCH_ROWS`` frames.
     """
-    import pandas as pd
-
     from huckli_spark.runtime import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
     files = spark.createDataFrame(
         [(p,) for p in paths], T.StructType([T.StructField("path", T.StringType(), False)])
     )
-    n_tasks = tasks or min(len(paths), spark.sparkContext.defaultParallelism)
-    files = files.repartition(max(n_tasks, 1))
+    par = spark.sparkContext.defaultParallelism
+    files = files.repartition(max(min(len(paths), par), 1))
 
     def decode_files(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for path in pdf["path"]:
-                name = os.path.basename(path)
-                rows: list[tuple[str, int, bytes]] = []
                 with open_maybe_gzip(path) as fh:
-                    buffered = io.BufferedReader(fh, 1 << 20)
-                    for i, payload in enumerate(iter_frames(buffered)):
-                        rows.append((name, i, payload))
-                        if len(rows) >= batch_rows:
-                            yield pd.DataFrame(
-                                rows, columns=["file_source", "frame_index", "payload"]
-                            )
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["file_source", "frame_index", "payload"]
-                    )
+                    yield from frame_batches(os.path.basename(path), fh)
 
     out = files.mapInPandas(decode_files, FRAMES_SCHEMA)
     # Fan frames out past the file count: with fewer files than cores,
@@ -133,10 +138,6 @@ def frames_df(
     # otherwise run on len(paths) tasks. The shuffle moves only raw
     # frame bytes — bounded by input size — and is skipped entirely at
     # production file counts where the scan already fills the cluster.
-    # An explicit ``tasks`` cap is honored: callers throttling decode
-    # parallelism (memory-bound decode, deterministic single-task
-    # runs) must not be silently overridden.
-    par = tasks or spark.sparkContext.defaultParallelism
     if len(paths) < par:
         out = out.repartition(par)
     return out

@@ -7,8 +7,11 @@ the Spark-native continuous version of the same dataflow:
 
 - ``ingest``: tail-follow a directory of ``{prefix}.{epoch_ms}.gz``
   framed-protobuf files with a file-source stream; Spark's streaming
-  checkpoint replaces the manual ``files_processed`` lower-bound scan
-  (which is still written, for query-surface parity).
+  checkpoint replaces the manual ``files_processed`` lower-bound scan.
+  Each micro-batch runs the batch ingest's frame splitter, decode and
+  write step (``Warehouse.write_decoded``): dropped frames are counted
+  and ``files_processed`` gets one append per micro-batch, for
+  query-surface parity.
 - ``windows``: event-time tumbling/sliding aggregation with
   watermarks for late data.
 - ``sessionize``: custom stateful operator (gap-based sessionization)

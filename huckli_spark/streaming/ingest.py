@@ -2,10 +2,13 @@
 
 Continuous version of ``Warehouse.ingest`` (reference §3.1/§3.2 —
 huckli-import/src/lib.rs:183-213): a ``binaryFile`` file-source stream
-discovers new ``{prefix}.{epoch_ms}.gz`` objects, each micro-batch runs
-the same frame-split -> protowire-decode -> project pipeline, and
-``foreachBatch`` appends every target table plus the
-``files_processed`` checkpoint rows.
+discovers new ``{prefix}.{epoch_ms}.gz`` objects. Only the source
+differs from a ``--continue`` run — Hadoop-read file content instead
+of a local file list; everything after it is the batch pipeline: the
+same per-file frame splitter, ``Warehouse.decode`` (dropped frames
+counted on ``dropped_frames``) and ``Warehouse.write_decoded`` in
+``foreachBatch`` (Observation row counts, one ``files_processed``
+checkpoint append per micro-batch, strictly after the data).
 
 Delivery semantics: the file source tracks seen files in the Spark
 streaming checkpoint, so a restarted stream never re-lists processed
@@ -29,14 +32,12 @@ import os
 from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from huckli_spark.ingest.decode import decode_frames
 from huckli_spark.ingest.filetypes import REGISTRY
-from huckli_spark.sources.framing import FRAMES_SCHEMA, iter_frames
-from huckli_spark.sources.listing import FileInfo
+from huckli_spark.sources.framing import FRAMES_SCHEMA, frame_batches
 
 if TYPE_CHECKING:
+    import pandas as pd
     from pyspark.sql.streaming import StreamingQuery
 
     from huckli_spark.ingest.warehouse import Warehouse
@@ -47,17 +48,15 @@ def stream_frames(
     directory: str,
     prefix: str,
     max_files_per_trigger: int | None = None,
-    batch_rows: int = 2048,
 ) -> DataFrame:
     """Streaming DataFrame of (file_source, frame_index, payload).
 
     ``binaryFile`` loads each object whole (content column); reference
     objects are single-digit-MB gzip files, far under task memory. The
-    gzip+4-byte-BE-length frame split (A6) runs inside ``mapInPandas``
-    so it scales with the file count, exactly like the batch reader.
+    gzip+4-byte-BE-length frame split (A6) is the batch reader's
+    per-file splitter (``frame_batches``) inside ``mapInPandas``, so it
+    scales with the file count.
     """
-    import pandas as pd
-
     from huckli_spark.runtime import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
@@ -76,20 +75,8 @@ def stream_frames(
     def split(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(path))
-                fh = gzip.GzipFile(fileobj=io.BytesIO(bytes(content)))
-                rows: list[tuple[str, int, bytes]] = []
-                for i, payload in enumerate(iter_frames(io.BufferedReader(fh))):
-                    rows.append((name, i, payload))
-                    if len(rows) >= batch_rows:
-                        yield pd.DataFrame(
-                            rows, columns=["file_source", "frame_index", "payload"]
-                        )
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["file_source", "frame_index", "payload"]
-                    )
+                with gzip.GzipFile(fileobj=io.BytesIO(bytes(content))) as gz:
+                    yield from frame_batches(os.path.basename(str(path)), gz)
 
     return raw.mapInPandas(split, FRAMES_SCHEMA)
 
@@ -109,36 +96,16 @@ def stream_ingest(
     reference's ``--continue`` run, minus the manual bookkeeping);
     ``False`` keeps tailing the directory.
     """
-    spec = REGISTRY[file_type]
-    from huckli_spark.ingest.filetypes import (
-        load_enum_overrides_from_env,
-        warn_placeholder_enums,
-    )
-
-    load_enum_overrides_from_env()
-    warn_placeholder_enums(spec.msg, file_type)
     frames = stream_frames(
-        spark, directory, spec.prefix, max_files_per_trigger=max_files_per_trigger
+        spark,
+        directory,
+        REGISTRY[file_type].prefix,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    decoded = decode_frames(frames, spec.msg)
-    multi_table = len(spec.tables) > 1
+    decoded = warehouse.decode(file_type, frames)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if multi_table:
-            batch_df = batch_df.persist()
-        try:
-            sources = [
-                r[0] for r in batch_df.select("file_source").distinct().collect()
-            ]
-            if not sources:
-                return
-            for name, df in spec.project(batch_df).items():
-                warehouse.append(name, df)
-            for src in sorted(sources):
-                warehouse.save_file_processed(FileInfo.from_key(src))
-        finally:
-            if multi_table:
-                batch_df.unpersist()
+        warehouse.write_decoded(file_type, batch_df)
 
     writer = (
         decoded.writeStream.foreachBatch(write_batch)

@@ -48,3 +48,27 @@ def test_compact_preserves_rows_and_ranges_are_disjoint(spark, tmp_path):
     ranges.sort()
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, f"overlapping file ranges: {ranges}"
+
+
+def test_plain_warehouse_compacts_logged_table_through_its_log(spark, tmp_path):
+    # acid-ness is a table property: a Warehouse built without
+    # acid=True must compact a logged table with a log commit, not by
+    # swapping the directory (which would delete the log and every
+    # past version with it)
+    from huckli_spark.ingest.txlog import TransactionLog
+
+    path = str(tmp_path / "wh")
+    li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_quantity")
+    Warehouse(spark, path, acid=True).append("li", li)
+    log = TransactionLog(os.path.join(path, "li"))
+    version = log.latest_version()
+    before = {tuple(r) for r in li.collect()}
+
+    wh = Warehouse(spark, path)
+    wh.compact("li", ["l_orderkey"], target_partitions=2)
+
+    assert log.exists()
+    assert log.latest_version() == version + 1
+    assert Warehouse(spark, path, acid=True).has_table("li")
+    assert {tuple(r) for r in wh.table("li").collect()} == before
+    assert {tuple(r) for r in wh.table("li", as_of=0).collect()} == before

@@ -91,7 +91,7 @@ class TestStreamIngest:
         ckpt = str(tmp_path / "ckpt")
 
         # crash (a): append of file[1] raises before any data lands
-        orig_append, orig_save = wh.append, wh.save_file_processed
+        orig_append, orig_save = wh.append, wh.save_files_processed
         state = {"arm": "append"}
 
         def failing_append(name, df, *a, **kw):
@@ -103,12 +103,12 @@ class TestStreamIngest:
                     raise RuntimeError("injected crash before append")
             return orig_append(name, df, *a, **kw)
 
-        def failing_save(info):
-            if state["arm"] == "save" and info.key == keys[1]:
+        def failing_save(infos):
+            if state["arm"] == "save" and keys[1] in {i.key for i in infos}:
                 raise RuntimeError("injected crash after append, before checkpoint")
-            return orig_save(info)
+            return orig_save(infos)
 
-        wh.append, wh.save_file_processed = failing_append, failing_save
+        wh.append, wh.save_files_processed = failing_append, failing_save
         q = stream_ingest(
             spark, "verified-speedtest", str(raw), wh, ckpt,
             max_files_per_trigger=1,
@@ -174,6 +174,52 @@ class TestStreamIngest:
             spark, "verified-speedtest", str(raw), wh, str(tmp_path / "ck2")
         )
         assert q.awaitTermination(180)
+        assert wh.table("verified_speedtest_report").count() == 10
+
+    def test_malformed_frame_is_counted_and_the_rest_lands(self, spark, tmp_path):
+        # the A8 log-and-skip policy is observable in streaming too:
+        # the drop lands on the warehouse's counter, as in batch ingest
+        raw = tmp_path / "raw"
+        raw.mkdir()
+        payloads = _speedtest_payloads(4)
+        # undecodable frame mid-file: LEN field claiming 255 bytes, truncated
+        payloads.insert(2, b"\x0a\xff\x01")
+        write_framed_gzip(str(raw / f"verified_speedtest.{T0_MS}.gz"), payloads)
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        q = stream_ingest(
+            spark, "verified-speedtest", str(raw), wh, str(tmp_path / "ckpt")
+        )
+        assert q.awaitTermination(180)
+        assert wh.dropped_frames.value == 1
+        assert wh.table("verified_speedtest_report").count() == 4
+        assert wh.table("files_processed").count() == 1
+
+    def test_one_checkpoint_append_per_micro_batch(self, spark, tmp_path):
+        # a 2-file backlog drains as ONE micro-batch: its checkpoint is
+        # one files_processed append naming both files, not one 1-row
+        # Spark write per file
+        raw = tmp_path / "raw"
+        raw.mkdir()
+        keys = []
+        for i in range(2):
+            ms = T0_MS + i * 3_600_000
+            keys.append(f"verified_speedtest.{ms}.gz")
+            write_framed_gzip(str(raw / keys[-1]), _speedtest_payloads(5, base_ms=ms))
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        orig_append = wh.append
+        checkpoints = []
+
+        def counting_append(name, df):
+            if name == "files_processed":
+                checkpoints.append(sorted(r[0] for r in df.select("file_name").collect()))
+            return orig_append(name, df)
+
+        wh.append = counting_append
+        q = stream_ingest(
+            spark, "verified-speedtest", str(raw), wh, str(tmp_path / "ckpt")
+        )
+        assert q.awaitTermination(180)
+        assert checkpoints == [sorted(keys)]
         assert wh.table("verified_speedtest_report").count() == 10
 
 
